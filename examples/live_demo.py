@@ -82,14 +82,13 @@ def main() -> None:
     raw = (spark.readStream.format("ws_market_data")
            .option("url", feed.url)
            .option("symbols", json.dumps(["AAPL", "MSFT", "BTCUSD"]))
-           .option("pollBudgetSecs", "1.0")
            .load()
            .selectExpr("to_json(struct(name, timestamp, exchange, data)) AS value"))
-    pipe = IngestPipeline(spark, out, symbols_dim, trigger_seconds=2,
+    pipe = IngestPipeline(spark, out, symbols_dim, trigger_seconds=0,
                           dedup_horizon="10 minutes",
                           redis_latest=(cache.host, cache.port))
     query = pipe.start(raw)
-    print("ingest running (2 s micro-batches) →", out)
+    print("ingest running (flush on 100 frames or 2 s) →", out)
 
     # wait for the first latest-state snapshot to land
     while not os.path.exists(os.path.join(pipe.latest_path, "_SUCCESS")):

@@ -15,6 +15,12 @@ Documented divergences:
   (config.go:74-78 — the parse is stubbed out).
 - ``WORKER_COUNT`` maps to ``spark.sql.shuffle.partitions`` guidance
   only; Spark's task scheduler replaces the hand-rolled worker pool.
+- ``BATCH_SIZE`` / ``FLUSH_INTERVAL`` keep the reference's flush rule
+  (processor.go:71-80) in the WS source: a micro-batch starts once
+  ``BATCH_SIZE`` frames are waiting or ``FLUSH_INTERVAL`` has passed
+  with any frame waiting. A flush admits everything buffered then,
+  not exactly ``BATCH_SIZE`` rows, because a micro-batch's fixed cost
+  (about 1 s) dominates its per-row cost.
 - ``DATABASE_URL`` drives the live PG mirror only when a server
   answers; the parquet history/latest tables always run (they carry
   the exactly-once contract the reference lacks).
@@ -214,10 +220,11 @@ def run_app(spark: SparkSession, cfg: EngineConfig, base_dir: str,
         pg_bootstrap(parsed[0], parsed[1], parsed[2], parsed[3])  # K3 DDL
         pg_history = parsed
 
+    # the source applies the flush rule; the query runs a batch as soon
+    # as the source admits one
     pipe = IngestPipeline(
         spark, base_dir, symbols_dim,
-        ttl_millis=cfg.redis_ttl_millis,
-        trigger_seconds=max(1, cfg.flush_interval_millis // 1000),
+        ttl_millis=cfg.redis_ttl_millis, trigger_seconds=0,
         redis_latest=redis_latest, pg_history=pg_history)
     registry.gauge_sources.append(pipe.metrics)  # dropped-write gauges
 
@@ -227,6 +234,8 @@ def run_app(spark: SparkSession, cfg: EngineConfig, base_dir: str,
            .option("api_key", cfg.api_key)
            .option("symbols", json.dumps(cfg.subscription_symbols))
            .option("maxFramesPerTrigger", "10000")  # main.go:61 channel cap
+           .option("batchSize", str(cfg.batch_size))
+           .option("flushIntervalMillis", str(cfg.flush_interval_millis))
            .load()
            .selectExpr("to_json(struct(name, timestamp, exchange, data)) AS value"))
     query = pipe.start(raw)

@@ -9,8 +9,14 @@ Reference dataflow (SURVEY.md §3 E1):
 Spark realization:
 
     readStream(source) → from_json → P1 filter → broadcast join
-    → writeStream.foreachBatch(dual_sink).trigger(processingTime='2s')
-    with checkpointing
+    → writeStream.foreachBatch(dual_sink) with checkpointing
+
+The flush rule (size OR timer) lives in the source: the WS source
+admits a batch once BATCH_SIZE frames are pending or FLUSH_INTERVAL
+has passed (streaming/sources.py), and ``run_app`` starts this query
+with a zero processing-time trigger so a batch runs as soon as the
+source admits one. File/rate sources keep a plain processing-time
+trigger (``trigger_seconds``).
 
 Semantics upgrades over the reference (documented, SURVEY.md §2.9):
 - exactly-once per micro-batch (checkpoint + idempotent/transactional
@@ -30,6 +36,7 @@ changes.
 from __future__ import annotations
 
 import os
+import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -116,11 +123,17 @@ class IngestPipeline:
       directory written with mode=overwrite, so replaying an epoch
       after a crash rewrites the same directory instead of appending
       duplicates — idempotent, hence exactly-once end to end.
-    - latest : per-symbol latest-value state table (the Redis cache,
+    - latest : per-symbol latest-value state (the Redis cache,
       cache_service.go:37-61), TTL-evicted like `EX ttl`. The merge
-      itself is idempotent (timestamp-max), and the table is replaced
-      via an atomic rename swap with a ``.old`` backup
-      (sources/fs.py) — a crash mid-swap never loses the table.
+      itself is idempotent (timestamp-max). Each epoch's merged state
+      is held in memory as an immutable snapshot (a local checkpoint),
+      which is what ``latest_snapshot`` serves, so the state is bounded
+      by driver memory (one row per live key). The same rows are also
+      written as the durable parquet ``latest`` table, replaced via an
+      atomic rename swap with a ``.old`` backup (sources/fs.py) — a
+      crash mid-swap never loses the table. That table is read only
+      while the process holds no state yet (a restart, or recovery
+      through ``.old``).
 
     The two writes share one micro-batch (one scan). ``base_dir`` owns
     the checkpoint AND both sinks as one unit: deleting the checkpoint
@@ -142,8 +155,8 @@ class IngestPipeline:
     partition_by_date: bool = False
     # Latest-state write parallelism. 1 (default) = single file, right
     # for the reference's ~500-key symbol space; a large key space
-    # (10⁸ keys) sets this higher so the state write isn't one task —
-    # >1 repartitions BY KEY, so a future bucketed/merge-on-key sink
+    # sets this higher so the state write isn't one task — >1
+    # repartitions BY KEY, so a future bucketed/merge-on-key sink
     # reads co-located state.
     state_partitions: int = 1
     # Optional LIVE Redis mirror for the latest-value cache (K2,
@@ -170,6 +183,11 @@ class IngestPipeline:
     queries: list = field(default_factory=list)
     redis_failures: int = 0  # observability: dropped cache writes
     pg_failures: int = 0     # observability: dropped PG batch inserts
+    _state: DataFrame | None = field(default=None, init=False, repr=False)
+    # serialises the latest-table swap with the one-time disk read, so
+    # that read never lists files a swap is deleting
+    _state_lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False)
 
     @property
     def history_path(self) -> str:
@@ -200,7 +218,7 @@ class IngestPipeline:
                     pg_wire_append(batch, *self.pg_history)
                 except Exception:
                     self.pg_failures += 1  # retry-exhausted → drop
-            # K2/A1: merge latest-per-key into the state table. Only a
+            # K2/A1: merge latest-per-key into the held state. Only a
             # missing table (first epoch, or crash mid-swap → backup)
             # is tolerated; real IO errors propagate and fail the
             # epoch rather than silently dropping old keys.
@@ -217,22 +235,29 @@ class IngestPipeline:
                         self.redis_latest[1], ttl_millis=self.ttl_millis)
                 except Exception:
                     self.redis_failures += 1
-            old = fs.read_with_backup(spark, self.latest_path)
+            old = self._held_state()
             merged = new_latest if old is None else latest_per_key(
                 old.select(*new_latest.columns).unionByName(new_latest),
                 "name", "timestamp")
             # TTL eviction ≈ Redis EX (cache_service.go:45-52)
             horizon = F.unix_millis(F.current_timestamp()) - F.lit(self.ttl_millis)
-            merged = merged.filter(F.col("timestamp") >= horizon)
+            # held as a local checkpoint: an immutable snapshot in the
+            # block manager (driver memory in the local-mode session)
+            # that no later swap can invalidate; its blocks are freed
+            # once nothing references it
+            state = merged.filter(F.col("timestamp") >= horizon) \
+                .localCheckpoint(eager=True)
             # micro-batches are sequential → one reusable staging dir
             if self.state_partitions <= 1:
-                merged = merged.coalesce(1)  # ~500-key reference shape
+                durable = state.coalesce(1)  # ~500-key reference shape
             else:
-                merged = merged.repartition(self.state_partitions,
+                durable = state.repartition(self.state_partitions,
                                             F.col("name"))
             staging = self.latest_path + ".staging"
-            merged.write.mode("overwrite").parquet(staging)
-            fs.atomic_swap(spark, staging, self.latest_path)
+            durable.write.mode("overwrite").parquet(staging)
+            with self._state_lock:
+                fs.atomic_swap(spark, staging, self.latest_path)
+                self._state = state
         finally:
             batch.unpersist()
 
@@ -256,14 +281,27 @@ class IngestPipeline:
         return {"ingest_redis_dropped_writes": self.redis_failures,
                 "ingest_pg_dropped_batches": self.pg_failures}
 
+    def _held_state(self) -> DataFrame | None:
+        """The latest state this process committed last. Until it has
+        committed one, the durable table is read (falling back to the
+        ``.old`` backup if a crash mid-swap left the live path missing,
+        sources/fs.py::atomic_swap contract) and held from then on;
+        None when neither exists."""
+        with self._state_lock:
+            if self._state is None:
+                disk = fs.read_with_backup(self.spark, self.latest_path)
+                if disk is not None:
+                    self._state = disk.localCheckpoint(eager=True)
+            return self._state
+
     def latest_snapshot(self) -> DataFrame:
-        """S5: the cache full-scan read (cache_service.go:67-93).
-        Falls back to the ``.old`` backup if a crash mid-swap left the
-        live path missing (sources/fs.py::atomic_swap contract)."""
-        df = fs.read_with_backup(self.spark, self.latest_path)
-        if df is None:  # no write yet — surface the normal reader error
+        """S5: the cache full-scan read (cache_service.go:67-93), served
+        from the held snapshot, so it never reads files a concurrent
+        epoch's swap deletes."""
+        state = self._held_state()
+        if state is None:  # no write yet — surface the normal reader error
             return self.spark.read.parquet(self.latest_path)
-        return df
+        return state
 
     def history(self) -> DataFrame:
         """The append-only history table without the epoch partition

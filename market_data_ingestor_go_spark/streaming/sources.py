@@ -14,12 +14,19 @@ pure-contract tests). A WS feed has no replay, so the source offers
 at-least-once from the connection buffer (documented; the reference
 is at-most-once, ingestor.go/processor.go).
 
+The source also owns the reference's flush rule (``batchSize`` /
+``flushIntervalMillis`` options, BATCH_SIZE / FLUSH_INTERVAL in
+processor.go:71-80), so a query over it runs with a zero
+processing-time trigger: Spark starts a batch as soon as the source
+admits one instead of waiting for a trigger boundary.
+
 File/rate sources (tests, backfill) come from streaming/pipeline.py.
 """
 
 from __future__ import annotations
 
 import json
+import time
 
 try:
     from pyspark.sql.datasource import (
@@ -48,6 +55,8 @@ WIRE_SCHEMA = StructType([
 
 RECONNECT_INITIAL_S = 1.0   # ingestor.go:37
 RECONNECT_CAP_S = 30.0      # ingestor.go:52-56
+IDLE_GAP_S = 0.05           # a live connection this quiet ends the read
+DRAIN_WAIT_S = 0.001        # "readable now" when draining a full batch
 
 
 class WebSocketStreamReader(SimpleDataSourceStreamReader):
@@ -67,6 +76,14 @@ class WebSocketStreamReader(SimpleDataSourceStreamReader):
     ``readBetweenOffsets`` can replay any in-flight range after a
     restart while memory stays bounded by maxFramesPerTrigger plus the
     uncommitted window.
+
+    Flush rule (processor.go:71-80): a read hands Spark a new end
+    offset once ``batchSize`` frames are pending, or once
+    ``flushIntervalMillis`` has passed since the last flush with at
+    least one frame pending; otherwise it returns its start offset and
+    no rows, and Spark runs no batch. A batch admits everything
+    buffered (up to maxFramesPerTrigger), not exactly ``batchSize``
+    rows: a micro-batch's fixed cost dwarfs a per-row one.
     """
 
     def __init__(self, options):
@@ -74,11 +91,17 @@ class WebSocketStreamReader(SimpleDataSourceStreamReader):
         self.api_key = options.get("api_key", "")
         self.symbols = json.loads(options.get("symbols", "[]"))
         self.max_per_trigger = int(options.get("maxFramesPerTrigger", "10000"))
-        self.poll_budget_secs = float(options.get("pollBudgetSecs", "1.0"))
+        self.batch_size = min(self.max_per_trigger,
+                              max(1, int(options.get("batchSize", "100"))))
+        self.flush_interval_s = int(
+            options.get("flushIntervalMillis", "2000")) / 1000.0
+        self._flush_at = time.monotonic() + self.flush_interval_s
         self._buffer: list[tuple] = []
         self._base = 0       # absolute offset of _buffer[0]
         self._served = 0     # absolute offset served to Spark so far
         self._ws = None
+        self._backoff = RECONNECT_INITIAL_S
+        self._retry_at = 0.0  # no redial before this monotonic time
         self.reconnects = 0  # observability: reconnect cycles survived
 
     def initialOffset(self) -> dict:
@@ -98,52 +121,79 @@ class WebSocketStreamReader(SimpleDataSourceStreamReader):
         conn.send(json.dumps({"event": "subscribe", "symbols": self.symbols}))
         return conn
 
+    def _append(self, msg: dict) -> None:
+        self._buffer.append((
+            msg.get("name"), msg.get("timestamp"), msg.get("exchange"),
+            json.dumps(msg.get("data")) if msg.get("data") is not None else None))
+
     def prefetched_frames(self, frames: list[dict]) -> None:
         """Test hook: enqueue decoded frames as if read off the wire."""
         for f in frames:
-            self._buffer.append((
-                f.get("name"), f.get("timestamp"), f.get("exchange"),
-                json.dumps(f.get("data")) if f.get("data") is not None else None))
+            self._append(f)
 
-    def _poll(self):
-        """Drain the connection into the buffer for up to
-        ``pollBudgetSecs`` per trigger. An idle-but-live connection
-        (recv timeout) ends the poll — it is NOT a disconnect; a
-        dropped connection reconnects with 1 s → 30 s exponential
-        backoff (ingestor.go:52-56), bounded by the poll budget so a
-        down feed never wedges ``latestOffset``."""
-        import time
-        backoff = RECONNECT_INITIAL_S
-        deadline = time.monotonic() + self.poll_budget_secs
-        while (self._base + len(self._buffer) - self._served < self.max_per_trigger
-               and time.monotonic() < deadline):
+    def _pending(self) -> int:
+        return self._base + len(self._buffer) - self._served
+
+    def _flush_due(self) -> bool:
+        pending = self._pending()
+        return pending >= self.batch_size or (
+            pending > 0 and time.monotonic() >= self._flush_at)
+
+    def _recv(self, timeout: float):
+        """One message off the wire, or None when none arrives within
+        ``timeout``. A dropped connection (or a failed dial) is closed
+        and redialled no sooner than the 1 s → 30 s exponential
+        backoff allows (ingestor.go:52-56); waiting out the backoff
+        also returns None, so a down feed never wedges ``read``."""
+        if self._ws is None:
+            wait = self._retry_at - time.monotonic()
+            if wait > 0:
+                time.sleep(min(wait, timeout))
+                return None
+        try:
+            if self._ws is None:
+                self._ws = self._connect()
+                self._backoff = RECONNECT_INITIAL_S
+            return self._ws.recv(timeout=timeout)
+        except TimeoutError:
+            return None
+        except Exception:
             try:
-                if self._ws is None:
-                    self._ws = self._connect()
-                    backoff = RECONNECT_INITIAL_S
-                raw = self._ws.recv(timeout=0.05)
-            except NotImplementedError:
-                raise
-            except TimeoutError:
-                break  # idle connection — serve what we have
+                if self._ws is not None:
+                    self._ws.close()
             except Exception:
-                try:
-                    if self._ws is not None:
-                        self._ws.close()
-                except Exception:
-                    pass
-                self._ws = None
-                self.reconnects += 1
-                time.sleep(min(backoff, max(0.0, deadline - time.monotonic())))
-                backoff = min(backoff * 2, RECONNECT_CAP_S)  # ingestor.go:52-56
-                continue
+                pass
+            self._ws = None
+            self.reconnects += 1
+            self._retry_at = time.monotonic() + self._backoff
+            self._backoff = min(self._backoff * 2, RECONNECT_CAP_S)
+            return None
+
+    def _poll(self) -> None:
+        """Read the wire into the buffer until a flush is due and what
+        is readable now has been drained (up to maxFramesPerTrigger),
+        the flush deadline passes, or the connection idles for
+        ``IDLE_GAP_S``. An idle-but-live connection is NOT a
+        disconnect; either way the read ends and Spark asks again.
+        Spark plans a batch for a new query's first offset even when
+        it adds no rows, so until the first flush an idle gap does not
+        end the read — the deadline does."""
+        while self._pending() < self.max_per_trigger:
+            remaining = self._flush_at - time.monotonic()
+            if self._flush_due():
+                timeout = DRAIN_WAIT_S
+            elif remaining > 0:
+                timeout = remaining if self._served == 0 else min(
+                    IDLE_GAP_S, remaining)
+            else:
+                timeout = IDLE_GAP_S  # overdue: flush on the first frame
+            raw = self._recv(timeout)
+            if raw is None:
+                return
             try:
-                msg = json.loads(raw)
+                self._append(json.loads(raw))
             except ValueError:
                 continue  # unmarshal error → drop (ingestor.go:105-110)
-            self._buffer.append((
-                msg.get("name"), msg.get("timestamp"), msg.get("exchange"),
-                json.dumps(msg.get("data")) if msg.get("data") is not None else None))
 
     def _slice(self, start: int, end: int) -> list[tuple]:
         lo = max(0, start - self._base)
@@ -151,14 +201,17 @@ class WebSocketStreamReader(SimpleDataSourceStreamReader):
         return self._buffer[lo:hi]
 
     def read(self, start: dict):
-        """One trigger: poll the wire, hand Spark [start, latest)."""
-        if self._ws is not None or self.url:
-            try:
-                self._poll()
-            except NotImplementedError:
-                pass
+        """One ``latestOffset`` call: poll the wire, then hand Spark
+        [start, latest) if the flush rule fires, else nothing. With no
+        URL there is no wire to wait on — the buffer (filled through
+        ``prefetched_frames``) is all there is, so it flushes at once."""
+        if self.url:
+            self._poll()
+        if not (self._flush_due() if self.url else self._pending() > 0):
+            return iter(()), start
         end = {"count": self._base + len(self._buffer)}
         self._served = end["count"]
+        self._flush_at = time.monotonic() + self.flush_interval_s
         return iter(self._slice(start["count"], end["count"])), end
 
     def readBetweenOffsets(self, start: dict, end: dict):

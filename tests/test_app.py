@@ -206,3 +206,49 @@ def test_module_entry_point(spark, tmp_path):
                 os.environ.pop(k, None)
             else:
                 os.environ[k] = v
+
+
+def test_run_app_batch_size_flush(spark, tmp_path):
+    """BATCH_SIZE is honoured: with BATCH_SIZE=1 and an hour-long
+    FLUSH_INTERVAL the flush timer cannot fire within the test, so a
+    single frame reaching history and latest_snapshot() shows the size
+    rule started the micro-batch."""
+    import time
+
+    from market_data_ingestor_go_spark.streaming.ws_minimal import WSServer
+
+    now = int(time.time() * 1000)
+
+    def on_connect(conn):
+        try:
+            conn.recv(timeout=5.0)  # subscribe
+            conn.send(json.dumps({"name": "USDSGD", "timestamp": now,
+                                  "exchange": None,
+                                  "data": {"data": {"bid": 1.34}}}))
+        except Exception:
+            pass
+
+    feed = WSServer(on_connect=on_connect).start()
+    try:
+        cfg = load_config(env={
+            **REQUIRED, "WS_URL": feed.url,
+            "DATABASE_URL": "postgres://app@127.0.0.1:1/postgres",
+            "BATCH_SIZE": "1", "FLUSH_INTERVAL": "1h",
+        }, dotenv_path=str(tmp_path / "no"))
+        symbols_dim = spark.createDataFrame(
+            [Row(name="USDSGD", exchange="forex")])
+        handle = run_app(spark, cfg, str(tmp_path / "app"), symbols_dim)
+        try:
+            done = tmp_path / "app" / "latest" / "_SUCCESS"
+            deadline = time.time() + 60
+            while not done.exists() and time.time() < deadline:
+                time.sleep(0.5)
+            assert [(r["name"], r["timestamp"]) for r in
+                    handle.pipeline.history().collect()] == [("USDSGD", now)]
+            assert [(r["name"], r["exchange"]) for r in
+                    handle.pipeline.latest_snapshot().collect()] == [
+                ("USDSGD", "forex")]
+        finally:
+            handle.stop()
+    finally:
+        feed.stop()

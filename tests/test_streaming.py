@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -160,6 +161,52 @@ def test_history_epoch_replay_idempotent(spark, symbols_dim, tmp_path):
     pipe._write_batch(batch, 8)  # a new epoch appends
     assert pipe.history().count() == 4
     assert pipe.latest_snapshot().count() == 2  # ts-max merge unchanged
+
+
+def _ingest_batch(spark, symbols_dim, frames):
+    return build_ingest_stream(spark.createDataFrame(
+        [Row(value=json.dumps(f)) for f in frames]), symbols_dim)
+
+
+def test_latest_snapshot_survives_next_swap(spark, symbols_dim, tmp_path):
+    """A snapshot handed out before an epoch still collects after that
+    epoch has swapped the latest table (the ticker/swap race): it is
+    the held state, not a listing of files the swap deletes."""
+    now = int(time.time() * 1000)
+    pipe = IngestPipeline(spark, str(tmp_path / "out"), symbols_dim)
+    pipe._write_batch(_ingest_batch(
+        spark, symbols_dim, [_frame("AAPL", now - 10, bid=1.0)]), 0)
+    before = pipe.latest_snapshot()
+    pipe._write_batch(_ingest_batch(spark, symbols_dim, [
+        _frame("AAPL", now, bid=2.0), _frame("BTCUSD", now, bid=3.0)]), 1)
+    assert [(r["name"], r["timestamp"]) for r in before.collect()] == [
+        ("AAPL", now - 10)]
+    assert {(r["name"], r["timestamp"])
+            for r in pipe.latest_snapshot().collect()} == {
+        ("AAPL", now), ("BTCUSD", now)}
+
+
+def test_fresh_pipeline_merges_with_state_on_disk(spark, symbols_dim,
+                                                  tmp_path):
+    """A new process (fresh IngestPipeline over the same base_dir) holds
+    no state yet: it starts from the durable latest table — here its
+    ``.old`` backup, as a crash mid-swap leaves it — and merges new
+    epochs into it (timestamp-max), writing the result back durably."""
+    now = int(time.time() * 1000)
+    base = str(tmp_path / "out")
+    pipe = IngestPipeline(spark, base, symbols_dim)
+    pipe._write_batch(_ingest_batch(spark, symbols_dim, [
+        _frame("AAPL", now, bid=1.0), _frame("BTCUSD", now - 5, bid=2.0)]), 0)
+    os.rename(pipe.latest_path, pipe.latest_path + ".old")
+
+    fresh = IngestPipeline(spark, base, symbols_dim)
+    fresh._write_batch(_ingest_batch(spark, symbols_dim, [
+        _frame("AAPL", now - 1, bid=3.0), _frame("ZZZ", now, bid=4.0)]), 1)
+    want = {"AAPL": now, "BTCUSD": now - 5, "ZZZ": now}
+    assert {r["name"]: r["timestamp"]
+            for r in fresh.latest_snapshot().collect()} == want
+    assert {r["name"]: r["timestamp"] for r in
+            spark.read.parquet(fresh.latest_path).collect()} == want
 
 
 def test_serve_path_flatten_and_client_views(spark, tmp_path):
@@ -328,7 +375,8 @@ def test_ws_minimal_loopback():
 
 def _frame_feed_server(wm, frames_per_conn):
     """WS server that reads the subscribe handshake then replays a
-    batch of frames per connection (one batch per connect cycle)."""
+    batch of frames per connection (one batch per connect cycle); a
+    float in a batch pauses the feed for that many seconds."""
     handshakes = []
 
     def on_connect(conn):
@@ -336,11 +384,26 @@ def _frame_feed_server(wm, frames_per_conn):
             handshakes.append(json.loads(conn.recv(timeout=5.0)))
             batch = frames_per_conn.pop(0) if frames_per_conn else []
             for f in batch:
-                conn.send(f if isinstance(f, str) else json.dumps(f))
+                if isinstance(f, float):
+                    time.sleep(f)
+                else:
+                    conn.send(f if isinstance(f, str) else json.dumps(f))
         except (wm.ConnectionClosed, TimeoutError):
             pass
 
     return wm.WSServer(on_connect=on_connect).start(), handshakes
+
+
+def _read_flush(reader, start, timeout=10.0):
+    """Call ``read`` the way Spark's source runner does, until it hands
+    out a new offset; a read that does not flush must return no rows."""
+    deadline = time.monotonic() + timeout
+    while True:
+        it, end = reader.read(start)
+        rows = list(it)
+        if end != start or time.monotonic() > deadline:
+            return rows, end
+        assert rows == []
 
 
 def test_ws_reader_live_poll_and_reconnect(monkeypatch):
@@ -359,10 +422,8 @@ def test_ws_reader_live_poll_and_reconnect(monkeypatch):
     try:
         reader = ws_sources.WebSocketStreamReader({
             "url": server.url, "api_key": "k1",
-            "symbols": json.dumps(["AAPL", "MSFT"]),
-            "pollBudgetSecs": "3.0"})
-        it, end = reader.read(reader.initialOffset())
-        rows = list(it)
+            "symbols": json.dumps(["AAPL", "MSFT"])})
+        rows, end = _read_flush(reader, reader.initialOffset())
         assert [r[0] for r in rows] == ["AAPL", "MSFT"]  # bad JSON dropped
         assert end == {"count": 2}
         assert handshakes[0] == {"event": "subscribe",
@@ -373,8 +434,7 @@ def test_ws_reader_live_poll_and_reconnect(monkeypatch):
         # read must reconnect (fresh subscribe handshake) and get batch 2
         for c in server.connections():
             c.close()
-        it2, end2 = reader.read(end)
-        rows2 = list(it2)
+        rows2, end2 = _read_flush(reader, end)
         assert [r[0] for r in rows2] == ["AAPL"] and rows2[0][1] == 3
         assert end2 == {"count": 3}
         assert reader.reconnects >= 1
@@ -384,29 +444,68 @@ def test_ws_reader_live_poll_and_reconnect(monkeypatch):
 
 
 def test_ws_reader_backpressure_cap(monkeypatch):
-    """X1: maxFramesPerTrigger caps a trigger's batch even when the
-    feed has more buffered — the remainder arrives next trigger."""
+    """X1 + the flush rule (processor.go:71-80): a read admits a batch
+    once batchSize frames are pending — draining what is readable,
+    capped at maxFramesPerTrigger, the remainder arriving next read —
+    or once flushIntervalMillis has passed with a frame pending.
+    Otherwise it returns its start offset and no rows; an empty feed
+    never advances the offset."""
     from market_data_ingestor_go_spark.streaming import ws_minimal as wm
     monkeypatch.setattr(ws_sources, "RECONNECT_INITIAL_S", 0.05)
 
-    frames = [_frame("AAPL", i, bid=float(i)) for i in range(1, 26)]
-    server, _ = _frame_feed_server(wm, [frames])
-    try:
-        reader = ws_sources.WebSocketStreamReader({
+    frames = [_frame("AAPL", i, bid=float(i)) for i in range(1, 31)]
+    # one batch per reader, in connect order; the first pauses twice
+    server, _ = _frame_feed_server(
+        wm, [frames[:5] + [1.0] + frames[5:8] + [1.0] + frames[8:],
+             frames[:3], []])
+
+    def reader(**opts):
+        return ws_sources.WebSocketStreamReader({
             "url": server.url, "api_key": "k",
             "symbols": json.dumps(["AAPL"]),
-            "maxFramesPerTrigger": "10", "pollBudgetSecs": "3.0"})
-        it1, end1 = reader.read(reader.initialOffset())
-        n1 = len(list(it1))
-        assert n1 <= 10 and end1["count"] == n1
-        reader.commit(end1)
-        it2, end2 = reader.read(end1)
-        n2 = len(list(it2))
-        assert n2 <= 10
-        reader.commit(end2)
-        it3, end3 = reader.read(end2)
-        total = n1 + n2 + len(list(it3))
-        assert total == 25  # nothing lost under the cap
+            **{k: str(v) for k, v in opts.items()}})
+
+    try:
+        r = reader(batchSize=5, maxFramesPerTrigger=10,
+                   flushIntervalMillis=60_000)
+        t0 = time.monotonic()
+        rows, end = _read_flush(r, r.initialOffset())
+        assert len(rows) == 5 and end == {"count": 5}
+        r.commit(end)
+
+        # fewer than batchSize, interval not elapsed: no offset, no rows
+        time.sleep(1.5)  # 3 more frames are readable by now
+        it, nxt = r.read(end)
+        assert nxt == end and list(it) == []
+
+        # batchSize reached: all that is readable, capped at 10 per read,
+        # long before the interval
+        time.sleep(1.5)  # the last 22 frames are readable by now
+        sizes, got = [], [row[1] for row in rows]
+        for _ in range(3):
+            it, end = r.read(end)
+            rows = list(it)
+            sizes.append(len(rows))
+            got += [row[1] for row in rows]
+            r.commit(end)
+        assert sizes == [10, 10, 5] and end == {"count": 30}
+        assert got == list(range(1, 31))  # nothing lost under the cap
+        assert time.monotonic() - t0 < 30
+
+        # a partial batch is flushed once the interval has passed
+        t0 = time.monotonic()
+        r = reader(batchSize=100, flushIntervalMillis=500)
+        rows, end = _read_flush(r, r.initialOffset())
+        assert len(rows) == 3 and end == {"count": 3}
+        assert time.monotonic() - t0 >= 0.5
+
+        # an empty feed never advances, even with the eagerest rule
+        r = reader(batchSize=1, flushIntervalMillis=100)
+        start = r.initialOffset()
+        t_end = time.monotonic() + 0.5
+        while time.monotonic() < t_end:
+            it, end = r.read(start)
+            assert end == start and list(it) == []
     finally:
         server.stop()
 
@@ -428,7 +527,6 @@ def test_ws_source_readstream_e2e(spark, tmp_path):
              .option("url", server.url)
              .option("api_key", "k1")
              .option("symbols", json.dumps(["AAPL"]))
-             .option("pollBudgetSecs", "2.0")
              .load()
              .writeStream.format("memory").queryName("ws_e2e")
              .option("checkpointLocation", str(tmp_path / "ckpt"))
